@@ -740,9 +740,9 @@ object Dedup extends QueryPack {
     * many-way exact copies), then MinHash/LSH near-dup on the exact
     * survivors only, components closed, and one survivor (smallest
     * doc_id) kept per cluster. Returns the surviving (doc_id, text)
-    * rows. This is the composition ScaleSmoke measures: the sketch
-    * passes scale with the corpus, the near-dup verify scales with the
-    * survivor set. */
+    * rows. This is the composition SCALE.md "Dedup at 100 TB" measures:
+    * the sketch passes scale with the corpus, the near-dup verify
+    * scales with the survivor set. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
     // the LSH banding underneath is calibrated for j >= 0.8 (32 bands ×
     // 4 rows); a lower threshold would need a different banding to keep

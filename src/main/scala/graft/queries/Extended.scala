@@ -95,7 +95,8 @@ object Extended extends QueryPack {
 
   /** Hot-key diagnostic — the profile you run BEFORE deciding whether a
     * join needs salting or AQE skew handling ([[graft.operators
-    * .SkewJoin]] / tools/SkewAb are the cures; this is the detector):
+    * .SkewJoin]] is the cure, its A/B is in SCALE.md; this is the
+    * detector):
     * per-key row counts reduced to the 5 hottest keys with their share
     * of all rows and skew ratio vs the mean key load. One hash
     * aggregate (map-side combinable) + a broadcast 1-row total + a
@@ -490,7 +491,7 @@ object Extended extends QueryPack {
     * sort-merge-shuffles the whole orders table; here a KB-scale Bloom
     * of the customer keys filters orders IN ITS SCAN TASKS, so only
     * the might-match sliver ever shuffles and the confirmed keys
-    * broadcast back into the exact anti join (AntiJoinAb measures the
+    * broadcast back into the exact anti join (SCALE.md §r8 has the
     * curve: history shuffle rows flat in history size). Equals the
     * oracle's NOT EXISTS exactly: the Bloom only routes rows, never
     * answers. */
@@ -701,9 +702,7 @@ object Extended extends QueryPack {
     * name lookups re-attach by id on the (small) deduped candidate
     * set, where AQE broadcasts the name table at this scale. */
   /** The FastSS blocking key stage: each name's {self + 1-deletion
-    * variants} hashed to 8-byte keys — (len+1) rows per record. Exposed
-    * for the stage profiler (tools/ProfileR6 fuzzy) so its timings
-    * measure the very expression the query runs. */
+    * variants} hashed to 8-byte keys — (len+1) rows per record. */
   private[graft] def fuzzyVariantsOf(names: DataFrame): DataFrame =
     names.select(col("id"),
       explode(expr(
@@ -980,11 +979,12 @@ object Extended extends QueryPack {
     // two 1-row frames; the cross join is a no-op physically.
     // The rational combination runs in Decimal(38,0), NOT long:
     // 4·edges·s_jk overflows int64 at ~16× the bench graph (measured —
-    // ScaleR7's mult=16 rep died on ARITHMETIC_OVERFLOW here while the
-    // moment SUMS were still comfortable), and 38 exact digits cover
-    // any corpus this engine will meet. One-row arithmetic, so the
-    // decimal path costs nothing; the double conversion at the end
-    // rounds the same exact integer both engines hold.
+    // the r7 graph sweep's mult=16 rep (SCALE.md §r7) died on
+    // ARITHMETIC_OVERFLOW here while the moment SUMS were still
+    // comfortable), and 38 exact digits cover any corpus this engine
+    // will meet. One-row arithmetic, so the decimal path costs
+    // nothing; the double conversion at the end rounds the same exact
+    // integer both engines hold.
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     nd.crossJoin(m)
       .withColumn("num", lit(4L).cast(d38) * col("edges") * col("s_jk")

@@ -689,9 +689,10 @@ object Similarity extends QueryPack {
     * quadratically with the corpus; keeping per-bucket occupancy
     * constant means bits ∝ log n ([[bitsForCorpus]]). The registered
     * queries stay at (8, 4) for oracle determinism (the DuckDB mirror
-    * carries these exact plane literals); [[graft.tools.ScaleR7]]
-    * measures the occupancy curve across bits — SCALE.md §r7 has the
-    * table. Seed fixed so resume/retry sees identical planes. */
+    * carries these exact plane literals); the occupancy curve across
+    * bits is measured in SCALE.md §r7 (semantic-dedup candidate
+    * occupancy vs corpus size). Seed fixed so resume/retry sees
+    * identical planes. */
   private[graft] def planesFor(tables: Int, bits: Int): Array[Array[Double]] = {
     val rnd = new scala.util.Random(42)
     Array.fill(tables * bits, Dim)(rnd.nextDouble() * 2 - 1)
@@ -1656,15 +1657,15 @@ object Similarity extends QueryPack {
 
   /** Same pipeline with the table/bit geometry free — the bits ∝ log n
     * scale knob ([[planesFor]]). The registered query pins (8, 4) for
-    * the oracle; [[graft.tools.ScaleR7]] drives other geometries for
-    * the occupancy curve. */
+    * the oracle; other geometries are measured in SCALE.md §r7
+    * (semantic-dedup candidate occupancy vs corpus size). */
   private[graft] def lshNearDupPairsOf(spark: SparkSession, vectors: DataFrame,
       threshold: Double, tables: Int, bits: Int): DataFrame =
     verifyPairs(vectors, lshCandidatesOf(spark, vectors, tables, bits), threshold)
 
   /** The candidate stage alone — (vec_a < vec_b) id pairs sharing a
-    * (table, bucket) key. Split out so [[graft.tools.ScaleR7]] can
-    * count candidates with exactly the query's own join. */
+    * (table, bucket) key. Split out so a scale sweep counts
+    * candidates with exactly the query's own join (SCALE.md §r7). */
   private[graft] def lshCandidatesOf(spark: SparkSession, vectors: DataFrame,
       tables: Int, bits: Int): DataFrame = {
     VectorFunctions.register(spark)
@@ -1767,8 +1768,9 @@ object Similarity extends QueryPack {
     * a regression in the knob (wrong bits, wrong plane slice, wrong
     * bucket math) changes the candidate set and turns the row red.
     * This is what makes the occupancy cure driver-gated rather than
-    * tool-only: ScaleR7 measures that fixed bits die (×4 candidates
-    * per corpus doubling) and this query IS the cure under gate. */
+    * tool-only: SCALE.md §r7 measures that fixed bits die (×4
+    * candidates per corpus doubling) and this query IS the cure under
+    * gate. */
   def semanticDedupLshAuto(spark: SparkSession, d: String): DataFrame = {
     val vectors = vecs(spark, d)
     val bits = autoBits(vectors.count())
@@ -1816,20 +1818,21 @@ object Similarity extends QueryPack {
 
   /** Same with `nlist` free — grown ∝ corpus size (the SemDeDup paper's
     * own scaling), per-list occupancy stays constant and candidates
-    * stay linear; [[graft.tools.ScaleR7]] measures the curve. */
+    * stay linear; SCALE.md §r7 has the measured curve. */
   private[graft] def ivfNearDupPairsOf(spark: SparkSession, all: DataFrame,
       threshold: Double, nlist: Int, softAssign: Int = 2): DataFrame =
     verifyPairs(all, ivfCandidatesOf(spark, all, nlist, softAssign), threshold)
 
   /** Same-coarse-list candidate pairs ([[trainCentroids]] quantizer),
-    * split out for the [[graft.tools.ScaleR7]] occupancy measurement.
+    * split out for the occupancy measurement in SCALE.md §r7.
     *
     * SOFT ASSIGNMENT (r7): each vector lands in its 2 nearest cells,
-    * not 1 — ScaleR7's diagonal showed single-assignment agreement
-    * decaying with duplicate density (0.92 → 0.66 as the corpus grew
-    * to 2000 at constant occupancy) because near-dup pairs split by a
-    * cell boundary never meet; the second-nearest cell recovers most
-    * of them (measured on the same diagonal: edge recall 0.39/0.32/
+    * not 1 — the r7 sweep's diagonal (SCALE.md §r7) showed
+    * single-assignment agreement decaying with duplicate density
+    * (0.92 → 0.66 as the corpus grew to 2000 at constant occupancy)
+    * because near-dup pairs split by a cell boundary never meet; the
+    * second-nearest cell recovers most of them (measured on the same
+    * diagonal: edge recall 0.39/0.32/
     * 0.25 → 0.90/0.76/0.60, agreement 0.92/0.83/0.66 → 0.99/0.94/
     * 0.82; candidates ×2.1 per corpus doubling — still LINEAR, the
     * multi-probe trade, same as FAISS nprobe>1 applied on the build
@@ -2012,8 +2015,8 @@ object Similarity extends QueryPack {
     * the IVF sibling of [[bitsForCorpus]]. With soft assignment ×2
     * each cell holds ~2·target vectors, so per-cell quadratic
     * candidate work is a CONSTANT (~2·64 choose 2) and total
-    * candidates stay linear — the property ScaleR7 measured (×2.1 per
-    * corpus doubling) but that no registered query exercised as a
+    * candidates stay linear — the property SCALE.md §r7 measured
+    * (×2.1 per corpus doubling) but that no registered query exercised as a
     * data-derived knob until this one. Pure integer math so the
     * oracle reproduces it from COUNT(*). Floor 4 = don't shatter a
     * model-scale corpus into near-empty cells. */
@@ -2068,12 +2071,12 @@ object Similarity extends QueryPack {
     *
     * Soft assignment is wider here than the fixed gate's (vs its 2):
     * at constant occupancy the agreement decays with duplicate
-    * DENSITY, which grows with SF in this corpus (IvfAutoProbe's flat
-    * sweep, SCALE.md §r8), and the r10 two-level quantizer adds a
-    * super-cell boundary near-dups can split across — HierProbe's
-    * (s1 × soft) sweep at n=2000 picked (4, 6) as the cheapest
-    * setting clearing the floor with margin (see the knob comment at
-    * the call). Candidates stay linear: per-cell work is still the
+    * DENSITY, which grows with SF in this corpus (the flat soft-width
+    * sweep, SCALE.md §r8 `semantic_dedup_ivf_auto`), and the r10
+    * two-level quantizer adds a super-cell boundary near-dups can
+    * split across — an (s1 × soft) sweep at n=2000 picked (4, 6) as
+    * the cheapest setting clearing the floor with margin (see the
+    * knob comment at the call). Candidates stay linear: per-cell work is still the
     * occupancy-bounded constant, ×soft of the single-assign form. */
   def semanticDedupIvfAuto(spark: SparkSession, d: String): DataFrame = {
     val all = vecs(spark, d)
@@ -2095,7 +2098,7 @@ object Similarity extends QueryPack {
     // EITHER generator — the subset law is structural for ANY candidate
     // set restricted to the probe set, and the agreement floor is
     // measured for both (flat soft=4: r9's green rows; hier knobs from
-    // HierProbe's (s1 × soft) sweep at sf0.1 (n=2000, k1=k2=6):
+    // the r10 (s1 × soft) sweep at sf0.1 (n=2000, k1=k2=6):
     // agreement 0.87 at (2,4) — the super level, not the cell count,
     // was the recall bottleneck — 0.90 at (3,4), 0.98 at (4,6), 0.998
     // at (4,8); (4,6) clears the 0.9 floor with margin at constant

@@ -22,10 +22,14 @@ import graft.ingest.{EventSink, IngestTransform}
   *        event-time filtering, generate_data.py:205)
   *     → `foreachBatch` append to partitioned sorted parquet (S5/S6)
   *
-  * Delivery: the reference is at-least-once end to end (producer acks=1 →
-  * Kafka-engine offset commit per block, duplicates possible). Kafka source
-  * + checkpointed sink gives exactly-once to files — strictly stronger
-  * (ST1). `dedupKeyed` upgrades to keyed dedup if wanted.
+  * Delivery: at-least-once, as in the reference (producer acks=1 →
+  * Kafka-engine offset commit per block, duplicates possible). The sink is
+  * `foreachBatch { EventSink.append }`, which is not idempotent: a batch
+  * replayed after a crash between its Parquet append and its commit-log
+  * write is appended twice. The keyed upgrade that exists today is
+  * [[dedupKeyed]]: it drops duplicate `event_id`s (a producer's retried
+  * sends) within a watermark horizon; it does not make the append itself
+  * idempotent.
   *
   * Lifecycle: CH creates its Kafka tables DETACHED and the operator ATTACHes
   * them to start consumption (reference generate_data.py:273-301,
@@ -121,7 +125,7 @@ object StreamingPipeline {
       checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): Pipeline =
     new Pipeline(spark, topic,
-      () => spark.readStream.text(inputDir).withColumnRenamed("value", "value"),
+      () => spark.readStream.text(inputDir),
       targetPath, checkpointPath, trigger)
 
   /** Optional exactly-once-by-key upgrade over the reference's at-least-once

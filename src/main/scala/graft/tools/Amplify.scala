@@ -3,19 +3,15 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared amplification geometry + sweep plumbing for the Scale tools.
+/** Shared amplification geometry + sweep plumbing for [[Scale]].
   *
   * Every octave sweep grows a base table by disjoint id-shifted copies
   * (`id + copy · IdShift`); the shift MUST clear the base id range or
   * copies collide and every keyed-vs-reference id join silently
   * explodes (ADVICE r11). One constant + one guard here, so a future
   * shift change cannot drift apart from the places that derive the
-  * copy index back out of an amplified id (the shingle sweep's copy
-  * suffix — where drift would silently re-create the quadratic-pairs
-  * disk fill ScaleR13 documents). The amplified-scan / bytes-policy /
-  * timing helpers live here too as of r13 — ScaleR11–R13 carried
-  * private copies (kept as round-stamped history); new sweeps share
-  * this one implementation. */
+  * copy index back out of an amplified id. The amplified-scan /
+  * bytes-policy / timing helpers live here too. */
 private[tools] object Amplify {
 
   /** Copy stride: copies land at `id + copy · IdShift`. */
@@ -27,25 +23,9 @@ private[tools] object Amplify {
     require(maxId < IdShift,
       s"amplification shift $IdShift must exceed max $what $maxId")
 
-  /** Disjoint id-shifted document copies through one scan — the
-    * ScaleR11+ octave shape, shift asserted past the base id range. */
-  def amplifiedDocs(spark: SparkSession, d: String,
-      mult: Int): DataFrame = {
-    val maxId = graft.Tables.documents(spark, d)
-      .agg(max(col("doc_id"))).collect()(0).getLong(0)
-    assertClears(maxId, "doc_id")
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.Tables.documents(spark, d)
-      .select(col("doc_id"), col("source"), col("text"))
-      .crossJoin(spark.range(mult).select(col("id").as("copy")))
-      .select((col("doc_id") + col("copy") * lit(IdShift)).as("doc_id"),
-        col("source"), col("text"))
-      .repartition(parts)
-  }
-
-  /** Narrow variant: id-shifted copies of the documents' LENGTH STATS
-    * only. Sweeps that rank/sum over (n_chars, n_tokens) must tokenize
-    * BEFORE the copy fan-out and repartition — shuffling the ~1.2 KB
+  /** Id-shifted copies of the documents' LENGTH STATS only. Sweeps
+    * that rank/sum over (n_chars, n_tokens) must tokenize BEFORE the
+    * copy fan-out and repartition — shuffling the ~1.2 KB
     * text payload per copy is dead weight that turns a 13 GB exchange
     * into ~400 GB at ×65536 (it filled the disk on the first r13
     * packing2d attempt; the fix is the same push-the-projection-down

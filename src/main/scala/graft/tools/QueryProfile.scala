@@ -44,7 +44,7 @@ object QueryProfile {
     case class Snap(jobs: Long, stages: Long, tasks: Long, runTimeMs: Long,
         shufReadBytes: Long, shufWriteBytes: Long, shufWriteRec: Long)
     def snap(): Snap = {
-      // listener bus is async: poll until stable (same idiom as StageMetrics)
+      // listener bus is async: poll until the counters stop moving
       def read() = Snap(jobs.get, stages.get, tasks.get, runTimeMs.get,
         shufReadBytes.get, shufWriteBytes.get, shufWriteRec.get)
       var prev = read(); var i = 0

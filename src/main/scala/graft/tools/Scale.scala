@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tools.Amplify.{bytesPolicy, mults, timed}
 
-/** THE scale-sweep driver (VERDICT r15 #6: the per-round ScaleR7–R16
-  * accumulation folded into one parameterized main; SCALE.md's
+/** THE scale-sweep driver (VERDICT r15 #6: the per-round sweep mains
+  * of r7–r16 folded into one parameterized main; SCALE.md's
   * historical rows stay valid as records without their generators
   * staying compilable forever). One mode per live question:
   *
