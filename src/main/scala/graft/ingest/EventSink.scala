@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   *  - `sortWithinPartitions(event_time, product_id)` before write → parquet
   *    row-group min/max statistics give CH-sparse-index-like data skipping
   *    for time-range scans, with zero custom code.
+  *  - a `rebalance` on `event_month` before the sort → one file per month
+  *    per append, not one per input split. AQE sizes the rebalance: a
+  *    small micro-batch's months coalesce into one task and a large
+  *    month splits into files of the advisory partition size (the shape
+  *    of Delta Lake's optimized writes), at the cost of one shuffle of
+  *    each batch (README "Spine performance").
   *
   * At 100 TB this layout is what makes the dashboard queries cheap: a
   * "last 24h" predicate touches at most two month partitions, and within
@@ -29,9 +35,11 @@ object EventSink {
   def withEventMonth(df: DataFrame): DataFrame =
     df.withColumn("event_month", date_format(col("event_time"), "yyyyMM"))
 
-  /** Append `df` to `path` as a partitioned, locally-sorted parquet table. */
+  /** Append `df` to `path` as a partitioned, locally-sorted parquet table:
+    * one sorted file per month when the batch is small. */
   def append(df: DataFrame, path: String): Unit =
     withEventMonth(df)
+      .hint("rebalance", col("event_month"))
       .sortWithinPartitions("event_month", "event_time", "product_id")
       .write.mode("append")
       .partitionBy("event_month")
@@ -70,9 +78,10 @@ object EventSink {
   }
 
   /** Compact one closed month partition: streaming appends leave one
-    * small sorted file per micro-batch; this rewrites the partition as
-    * few large files re-sorted on the table's sort key, restoring
-    * optimal row-group skipping. Closed months are immutable, so the
+    * small sorted file per micro-batch (a large batch: a few files of the
+    * advisory size); this rewrites the partition as few large files
+    * re-sorted on the table's sort key, restoring optimal row-group
+    * skipping across batches. Closed months are immutable, so the
     * rewrite is safe; run it per month as months roll over. */
   def compactMonth(spark: org.apache.spark.sql.SparkSession, path: String,
       month: String, targetFiles: Int = 1): Unit =

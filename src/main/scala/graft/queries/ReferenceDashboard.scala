@@ -23,13 +23,16 @@ import org.apache.spark.sql.types.DecimalType
 object ReferenceDashboard {
 
   /** app.py:57-66 — last 24 h of sales by hour: sum quantity, sum total,
-    * ordered by hour. */
+    * ordered by hour. At most 25 rows, so they are sorted in one
+    * partition: a global sort would add a range-sampling job and an
+    * exchange to every refresh. */
   def salesByHour(sales: DataFrame, now: Column): DataFrame =
     sales
       .filter(col("event_time") >= now - expr("INTERVAL 1 DAY"))
       .groupBy(date_trunc("hour", col("event_time")).as("hour"))
       .agg(sum(col("quantity")).as("total_quantity"),
            sum(col("total")).cast(DecimalType(38, 2)).as("revenue"))
+      .coalesce(1)
       .orderBy("hour")
 
   /** app.py:91-100 — per product over 7 days: supply quantity as
@@ -56,12 +59,13 @@ object ReferenceDashboard {
       .limit(10)
 
   /** app.py:150-168 — row counts per table + readiness flag (`ready`
-    * once sales exist). */
-  def status(sales: DataFrame, movements: DataFrame): DataFrame = {
-    val s = sales.agg(count(lit(1)).as("sales_count"))
-    val m = movements.agg(count(lit(1)).as("stock_movements_count"))
-    s.crossJoin(broadcast(m)) // 1-row × 1-row; hint for pre-AQE planning
+    * once sales exist). Both tables are counted in one aggregate over a
+    * union of row flags, not two aggregates joined. */
+  def status(sales: DataFrame, movements: DataFrame): DataFrame =
+    sales.select(lit(true).as("is_sale"))
+      .unionAll(movements.select(lit(false).as("is_sale")))
+      .agg(count(when(col("is_sale"), 1)).as("sales_count"),
+           count(when(!col("is_sale"), 1)).as("stock_movements_count"))
       .withColumn("status",
         when(col("sales_count") > 0, "ready").otherwise("waiting"))
-  }
 }

@@ -68,9 +68,10 @@ object StreamingPipeline {
           .option("checkpointLocation", checkpointPath)
           .trigger(trigger)
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            // Sort-within-partitions happens per micro-batch; files
-            // interleave across batches but row-group stats still prune
-            // (SURVEY.md §7 risk 6).
+            // Each micro-batch lands as one sorted file per month (AQE
+            // sizes the sink's rebalance, so a large month splits into
+            // advisory-size files). Files interleave across batches but
+            // row-group stats still prune (SURVEY.md §7 risk 6).
             EventSink.append(batch, targetPath)
           }
           .start()

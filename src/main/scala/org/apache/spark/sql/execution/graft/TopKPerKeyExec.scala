@@ -5,12 +5,14 @@ import scala.collection.mutable
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, NullsFirst, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, HashPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession, Strategy}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, SortExec, SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, ResultQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
@@ -217,13 +219,16 @@ object GraftPlanBridge {
     * LPA A/Bs). This helper takes the third corner: deserialized
     * blocks + a DECLARED `HashPartitioning(keys, N)`.
     *
-    * The declaration must be TRUE, so the contract is strict: `df`'s
-    * physical plan must end in `repartition(N, keys…)` with an
+    * The declaration must be TRUE, so it is checked, not trusted: `df`'s
+    * final executed plan must end in `repartition(N, keys…)` with an
     * EXPLICIT N (AQE never coalesces a user repartition with a pinned
     * count, and Spark's `RepartitionByExpression` uses exactly the
     * `HashPartitioning` declared here), optionally followed by
     * narrow, partitioning-preserving ops (`sortWithinPartitions`,
-    * projections). `keys` are resolved against `df`'s output by name.
+    * projections). `keys` are resolved against `df`'s output through
+    * the session's resolver; a key matching no column or several
+    * columns, or a plan that does not have the declared layout, throws
+    * `IllegalArgumentException` (see [[checkDeclaredLayout]]).
     *
     * Returns the checkpointed frame plus the backing RDD — callers
     * unpersist the RDD when the loop ends (Dataset.unpersist is a
@@ -234,16 +239,25 @@ object GraftPlanBridge {
     val df = df0.asInstanceOf[DataFrame]
     val spark = df.sparkSession
     val qe = df.queryExecution
+    val attrs = qe.analyzed.output
+    val resolver = spark.sessionState.conf.resolver
+    val keyAttrs = keys.map { k =>
+      attrs.filter(a => resolver(a.name, k)) match {
+        case Seq(a) => a
+        case found => throw new IllegalArgumentException(
+          s"checkpointHashPartitioned: key '$k' matches ${found.size} columns of " +
+            s"${attrs.map(_.name).mkString("[", ", ", "]")}; it must match exactly one")
+      }
+    }
+    // under AQE, toRdd runs every stage below the last one, so the final
+    // plan is fixed here and can be checked before anything is stored
+    val rows = qe.toRdd
+    checkDeclaredLayout(qe.executedPlan, keyAttrs, rows.getNumPartitions, sortedByKeys)
     // toRdd reuses row buffers per partition — copy, as Dataset.checkpoint does
-    val rdd = qe.toRdd.map(_.copy())
+    val rdd = rows.map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.count() // materialize now: loop rounds must read blocks, not race
-    val attrs = qe.analyzed.output
-    val keyAttrs = keys.map(k => attrs.find(_.name == k).getOrElse(
-      throw new IllegalArgumentException(
-        s"checkpointHashPartitioned: no column '$k' in ${attrs.map(_.name)}")))
-    val part = org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-      keyAttrs, rdd.getNumPartitions)
+    val part = HashPartitioning(keyAttrs, rdd.getNumPartitions)
     // declared only when the caller ALSO ran sortWithinPartitions on
     // exactly `keys` (ascending, nulls first — the defaults both
     // sides use): a sort-merge self-join then skips its per-partition
@@ -253,5 +267,61 @@ object GraftPlanBridge {
     (Dataset.ofRows(spark,
       org.apache.spark.sql.execution.LogicalRDD(attrs, rdd, part,
         ordering)(spark)), rdd)
+  }
+
+  /** Throws unless `plan` (an executed plan; AQE wrappers are unwrapped)
+    * delivers `HashPartitioning(keys, numPartitions)`, and, with
+    * `sortedByKeys`, rows sorted on `keys` within each partition:
+    *
+    *  - walking down from the root through unary nodes, the first shuffle
+    *    is a `ShuffleExchangeExec` hash-partitioning on exactly `keys`, in
+    *    order, into `numPartitions` partitions (the checkpointed RDD's
+    *    count, so no coalesce or AQE shuffle read re-cut it on the way up);
+    *  - an AQE shuffle read on the way reads each reducer partition whole;
+    *  - with `sortedByKeys`, the topmost `SortExec` above that shuffle
+    *    sorts on `keys` first, ascending with nulls first. */
+  private def checkDeclaredLayout(plan: SparkPlan, keys: Seq[Attribute],
+      numPartitions: Int, sortedByKeys: Boolean): Unit = {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"checkpointHashPartitioned: $why. The frame must end in " +
+        s"repartition($numPartitions, ${keys.map(_.name).mkString(", ")})" +
+        (if (sortedByKeys) " followed by sortWithinPartitions on the same keys" else "") +
+        s"; its executed plan is:\n$plan")
+    def sortsOnKeys(s: SortExec): Boolean =
+      s.sortOrder.size >= keys.size && s.sortOrder.zip(keys).forall { case (o, k) =>
+        o.child.semanticEquals(k) && o.direction == Ascending && o.nullOrdering == NullsFirst
+      }
+    // (the exchange, the topmost sort above it)
+    @scala.annotation.tailrec
+    def lastShuffle(p: SparkPlan, topSort: Option[SortExec])
+        : (ShuffleExchangeExec, Option[SortExec]) = p match {
+      case a: AdaptiveSparkPlanExec => lastShuffle(a.executedPlan, topSort)
+      case r: ResultQueryStageExec => lastShuffle(r.plan, topSort)
+      case e: ShuffleExchangeExec => (e, topSort)
+      case q: ShuffleQueryStageExec => q.plan match {
+        case e: ShuffleExchangeExec => (e, topSort)
+        case other => fail(s"the last shuffle is a ${other.nodeName}, not a ShuffleExchangeExec")
+      }
+      case r: AQEShuffleReadExec =>
+        if (r.partitionSpecs.zipWithIndex.exists {
+              case (CoalescedPartitionSpec(s, e, _), i) => s != i || e != i + 1
+              case _ => true
+            }) fail("an AQE shuffle read re-cuts the last shuffle's partitions")
+        lastShuffle(r.child, topSort)
+      case s: SortExec => lastShuffle(s.child, topSort.orElse(Some(s)))
+      case u: UnaryExecNode => lastShuffle(u.child, topSort)
+      case other => fail(s"no shuffle between the root and ${other.nodeName}")
+    }
+    val (exchange, topSort) = lastShuffle(plan, None)
+    exchange.outputPartitioning match {
+      case HashPartitioning(exprs, n) =>
+        if (exprs.size != keys.size || exprs.zip(keys).exists { case (e, k) => !e.semanticEquals(k) })
+          fail(s"the last shuffle hash-partitions on ${exprs.mkString(", ")}, not on the keys")
+        if (n != numPartitions)
+          fail(s"the last shuffle makes $n partitions but the frame has $numPartitions")
+      case other => fail(s"the last shuffle partitions by $other, not by a key hash")
+    }
+    if (sortedByKeys && !topSort.exists(sortsOnKeys))
+      fail("no sort on the keys follows the last shuffle")
   }
 }

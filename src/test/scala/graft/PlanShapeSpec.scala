@@ -140,6 +140,43 @@ class PlanShapeSpec extends SparkSpec {
       .findFirstIn(q.queryExecution.executedPlan.toString).isDefined)
   }
 
+  /** Spark's plan walker that looks through AQE wrappers and stages. */
+  private object finalPlan extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private lazy val refTables = {
+    val sales = tmpDir("ref-sales"); val moves = tmpDir("ref-moves")
+    Seq(("2026-08-12 10:10:00", 2, BigDecimal("180.00")), ("2026-08-12 11:20:00", 4, BigDecimal("90.00")))
+      .toDF("t", "quantity", "total")
+      .select(col("t").cast("timestamp").as("event_time"), col("quantity"),
+        col("total").cast("decimal(12,2)").as("total"))
+      .write.mode("overwrite").parquet(sales)
+    Seq(("2026-08-12 09:00:00", 7)).toDF("t", "product_id")
+      .select(col("t").cast("timestamp").as("event_time"), col("product_id"))
+      .write.mode("overwrite").parquet(moves)
+    (spark.read.parquet(sales), spark.read.parquet(moves))
+  }
+
+  test("reference salesByHour sorts its hourly rows in one partition: no range exchange") {
+    val now = org.apache.spark.sql.functions.lit("2026-08-12 23:00:00").cast("timestamp")
+    val q = queries.ReferenceDashboard.salesByHour(refTables._1, now)
+    assert(q.collect().length === 2)
+    val ranged = finalPlan.collect(q.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e
+    }
+    assert(ranged.isEmpty, s"range exchange in:\n${q.queryExecution.executedPlan}")
+  }
+
+  test("reference status counts both tables in one aggregate: no broadcast, no nested-loop join") {
+    val q = queries.ReferenceDashboard.status(refTables._1, refTables._2)
+    assert(q.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ===
+      Seq((2L, 1L, "ready")))
+    val names = finalPlan.mapPlans(q.queryExecution.executedPlan)(_.nodeName)
+    assert(!names.exists(n => n.contains("BroadcastExchange") || n.contains("NestedLoopJoin") ||
+      n.contains("CartesianProduct")), names.mkString(", "))
+  }
+
   test("q19 disjunctive predicates still plan as a hash join, not nested-loop") {
     val p = planOf(queries.TpcH.q19Disjunctive(spark, sf0001))
     assert(p.contains("BroadcastHashJoin") || p.contains("ShuffledHashJoin") ||

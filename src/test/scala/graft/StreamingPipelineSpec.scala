@@ -70,6 +70,29 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(after === before)
   }
 
+  test("one micro-batch from several input files lands as one sorted file per month") {
+    val in = tmpDir("l-in"); val out = tmpDir("l-out"); val ckpt = tmpDir("l-ckpt")
+    // three files, each with unsorted events in both months: one split
+    // per file, so without the sink's rebalance every month gets 3 files
+    for (f <- 1 to 3) writeLines(in, s"f$f.json", Seq(
+      sale(s"a$f", s"2026-09-0$f 12:00:00", "10.00"),
+      sale(s"b$f", s"2026-08-2$f 08:00:00", "10.00"),
+      sale(s"c$f", s"2026-09-0$f 01:00:00", "10.00"),
+      sale(s"d$f", s"2026-08-1$f 23:00:00", "10.00")))
+    val p = StreamingPipeline.textDir(spark, Sales, in, out, ckpt)
+    val q = p.attach(); p.processAllAvailable(); p.detach()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 1, "all three files in one micro-batch")
+    for (month <- Seq("202608", "202609")) {
+      val files = new java.io.File(s"$out/event_month=$month").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length === 1, s"month $month: ${files.map(_.getName).mkString(", ")}")
+      val times = spark.read.parquet(files.head.getPath)
+        .select("event_time").as[java.sql.Timestamp].collect().map(_.getTime)
+      assert(times.length === 6)
+      assert(times.sameElements(times.sorted), s"month $month rows not in event_time order")
+    }
+  }
+
   test("warehouse topic pipeline ingests its schema (S3)") {
     val in = tmpDir("wh-in"); val out = tmpDir("wh-out"); val ckpt = tmpDir("wh-ckpt")
     writeLines(in, "b.json", Seq(
